@@ -17,7 +17,9 @@ Covers reference S6-S9 (/root/reference/pipe_save.py):
 - read_all: the whole dataset.
 - sidecar: per-partition lineage + metrics rows (FIXTURES.md F4); resume =
   anti-join of input partitions against completed sidecar rows, so a killed
-  run re-processes exactly the unfinished partitions.
+  run re-processes exactly the unfinished partitions. The metrics come from
+  one column-pruned scan of the committed partition, so they describe what
+  is on disk and the partition's plan executes once, in its write.
 """
 
 from __future__ import annotations
@@ -220,25 +222,38 @@ def pending_partitions(spark: SparkSession, all_partitions: list[str], result_pa
 def append_sidecar(spark: SparkSession, result_path: str, partition_id: str, result_df: DataFrame, run_id: str | None = None) -> None:
     """Append one lineage+metrics row for a completed input partition.
     Metrics follow the A3 rollup shape (/root/reference/pipe_save.py:105-122)
-    plus keep/drop counts and a per-bucket map."""
+    plus keep/drop counts and a per-bucket map. run_resumable passes the
+    committed files, so the row comes from one column-pruned scan of what is
+    on disk (one groupBy("bucket"), totals summed here) rather than from a
+    re-execution of the plan that wrote them. Totals keep F.sum's null
+    semantics (null when no row has a value; n_in is 0 for an empty
+    partition); rows with a null bucket count in the totals only."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    agg = result_df.agg(
-        F.count(F.lit(1)).alias("n_in"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
-        F.sum("length").alias("sum_length"),
-        F.sum("original_length").alias("sum_original_length"),
-    ).collect()[0]
-    buckets = {r["bucket"]: r["n"] for r in result_df.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect() if r["bucket"]}
+    groups = (
+        result_df.groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_in"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
+            F.sum("length").alias("sum_length"),
+            F.sum("original_length").alias("sum_original_length"),
+        )
+        .collect()
+    )
+
+    def total(name):
+        vals = [g[name] for g in groups if g[name] is not None]
+        return sum(vals) if vals else None
+
     row = {
         "partition_id": partition_id,
         "run_id": run_id,
-        "n_in": agg["n_in"],
-        "n_kept": agg["n_kept"],
-        "n_dropped": agg["n_dropped"],
-        "sum_length": agg["sum_length"],
-        "sum_original_length": agg["sum_original_length"],
-        "by_bucket": buckets,
+        "n_in": sum(g["n_in"] for g in groups),
+        "n_kept": total("n_kept"),
+        "n_dropped": total("n_dropped"),
+        "sum_length": total("sum_length"),
+        "sum_original_length": total("sum_original_length"),
+        "by_bucket": {g["bucket"]: g["n_in"] for g in groups if g["bucket"]},
     }
     import datetime
 
@@ -255,11 +270,18 @@ def run_resumable(
     """Process each input partition exactly once across restarts:
     skip sidecar-completed partitions, write each result partition, append
     its sidecar row last (write-then-mark => at-least-once per partition,
-    idempotent because each partition overwrites its own subdirectory)."""
+    idempotent because each partition overwrites its own subdirectory).
+    run_one's plan executes once per partition, in the write: the sidecar
+    metrics come from one column-pruned scan of the committed files, so they
+    describe exactly the rows on disk even when the plan is
+    nondeterministic."""
     processed = []
     for pid in pending_partitions(spark, list(input_partitions), result_path):
         result = run_one(input_partitions[pid])
-        result.write.mode("overwrite").parquet(os.path.join(result_path, f"part_id={pid}"))
-        append_sidecar(spark, result_path, pid, result)
+        part_path = os.path.join(result_path, f"part_id={pid}")
+        result.write.mode("overwrite").parquet(part_path)
+        # the written schema is the plan's: passing it skips the Spark job
+        # that parquet schema inference would run over the new files
+        append_sidecar(spark, result_path, pid, spark.read.schema(result.schema).parquet(part_path))
         processed.append(pid)
     return processed

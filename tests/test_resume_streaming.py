@@ -60,6 +60,98 @@ def test_resume_processes_each_partition_once(spark, tmp_path):
     assert tot[0] == tot[1] == got.count()
 
 
+SIDECAR_INPUT = "id long, keep boolean, length long, original_length long, bucket string"
+
+
+def _sidecar_row(spark, result_path, pid):
+    rows = spark.read.parquet(tables.sidecar_path(result_path)).where(F.col("partition_id") == pid).collect()
+    assert len(rows) == 1
+    return rows[0]
+
+
+def test_run_resumable_executes_plan_once(spark, tmp_path):
+    """The write is the plan's only execution: the sidecar row is built from
+    the committed files, so a per-row Python UDF runs N times, not once for
+    the write and again for each sidecar aggregate."""
+    n = 300
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def counted(_i):
+        calls.add(1)
+        return True
+
+    def run_one(df):
+        # a filter is never column-pruned, so every execution of the plan
+        # (the write and, on a re-executing sidecar, each of its scans) calls it
+        return df.where(counted("id")).select(
+            "id",
+            (F.col("id") % 2 == 0).alias("keep"),
+            F.col("id").alias("length"),
+            F.col("id").alias("original_length"),
+            F.when(F.col("id") % 3 == 0, "tail").otherwise("head").alias("bucket"),
+        )
+
+    result_path = str(tmp_path / "result")
+    assert tables.run_resumable(spark, {"p0": spark.range(n)}, result_path, run_one) == ["p0"]
+    assert calls.value == n
+    row = _sidecar_row(spark, result_path, "p0")
+    assert (row["n_in"], row["n_kept"], row["n_dropped"]) == (n, n // 2, n // 2)
+    assert row["by_bucket"] == {"head": n - n // 3, "tail": n // 3}
+
+
+def test_sidecar_matches_disk_under_nondeterminism(spark, tmp_path):
+    """With a nondeterministic plan a re-execution keeps different rows from
+    the ones written; the sidecar must describe the committed files."""
+    import random
+
+    coin = F.udf(lambda: random.random() < 0.5, "boolean").asNondeterministic()
+    side = F.udf(lambda: "head" if random.random() < 0.5 else "tail", "string").asNondeterministic()
+
+    def run_one(df):
+        return df.select(
+            "id", coin().alias("keep"), F.col("id").alias("length"), F.col("id").alias("original_length"), side().alias("bucket")
+        )
+
+    result_path = str(tmp_path / "result")
+    tables.run_resumable(spark, {"p0": spark.range(2000)}, result_path, run_one)
+    disk = spark.read.parquet(str(tmp_path / "result" / "part_id=p0"))
+    kept = disk.where(F.col("keep")).count()
+    by_bucket = {r["bucket"]: r["count"] for r in disk.groupBy("bucket").count().collect()}
+    row = _sidecar_row(spark, result_path, "p0")
+    assert (row["n_in"], row["n_kept"], row["n_dropped"]) == (2000, kept, 2000 - kept)
+    assert row["by_bucket"] == by_bucket
+
+
+def test_sidecar_edge_cases(spark, tmp_path):
+    """Hand-computed sidecar rows: an empty partition (n_in=0, null sums, no
+    buckets), null buckets (in the totals, not in by_bucket), null keep (in
+    n_in only), and a partition whose sums are all null."""
+    parts = {
+        "empty": [],
+        "mixed": [
+            (1, True, 10, 12, "head"),
+            (2, False, 5, 5, "head"),
+            (3, None, 7, 9, "tail"),
+            (4, True, None, 3, None),
+            (5, False, 2, None, None),
+        ],
+        "nulls": [(6, None, None, None, "head"), (7, None, None, None, None)],
+    }
+    inputs = {pid: spark.createDataFrame(rows, SIDECAR_INPUT) for pid, rows in parts.items()}
+    result_path = str(tmp_path / "result")
+    assert sorted(tables.run_resumable(spark, inputs, result_path, lambda df: df)) == sorted(parts)
+    cols = ("n_in", "n_kept", "n_dropped", "sum_length", "sum_original_length", "by_bucket")
+    want = {
+        "empty": (0, None, None, None, None, {}),
+        "mixed": (5, 2, 2, 24, 29, {"head": 2, "tail": 1}),
+        "nulls": (2, None, None, None, None, {"head": 1}),
+    }
+    for pid, expected in want.items():
+        row = _sidecar_row(spark, result_path, pid)
+        assert tuple(row[c] for c in cols) == expected, pid
+
+
 def test_partitioned_write_and_pruned_read(spark, tmp_path):
     out = str(tmp_path / "bybucket")
     cutoffs = load_cutoffs_dict()
